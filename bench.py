@@ -6,6 +6,11 @@ JSON line:
     {"metric": ..., "value": <total_sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
 
+$SPARK_GRAFT_CPUS defaults to every usable core. The driver heap is sized
+like the benchmark of record's (``perfbench/run.py:size_host``: a quarter of
+physical memory, at most 8 GB); on a 4-core, 15 GB host the sweep ran the
+same at 3 GB as at 7 GB (pass-1 152.2 vs 155.4 s, driver GC 11.3 vs 9.5 s).
+
 Extra keys record the BASELINE.md targets: transpile_ms_per_func (< 50 ms),
 speedup_vs_python_udf (>= 10x target: transpiled CaseWhen vs row-wise Python
 UDF on Q1), and ratio_vs_handwritten (~1x: generated chain vs hand-written
@@ -30,7 +35,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 #: first-run wall (sec) above which a query gets a steady-state rerun even
 #: when it built no memo: every expensive entry gets a reproducible second
@@ -246,7 +251,30 @@ def _detail_paths(repo_root: Path, cpus: str) -> list[Path]:
     ]
 
 
+def _size_host() -> int:
+    """The driver heap in GB for this host; exits with a message when the
+    host is too small or $SPARK_GRAFT_CPUS asks for more cores than the
+    process may run on."""
+    from perfbench.run import HostTooSmall, size_host
+
+    try:
+        host = size_host()
+    except HostTooSmall as exc:
+        sys.exit(f"bench.py: {exc}")
+    if not CPUS.isdigit() or not 1 <= int(CPUS) <= host["cores"]:
+        sys.exit(f"bench.py: SPARK_GRAFT_CPUS={CPUS!r}; this host has {host['cores']} usable cores")
+    return host["heap_gb"]
+
+
+def _driver_gc_sec(spark) -> float:
+    """Seconds the driver JVM has spent in garbage collection so far."""
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return round(sum(max(0, bean.getCollectionTime()) for bean in beans) / 1e3, 3)
+
+
 def main() -> None:
+    heap_gb = _size_host()
+
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
@@ -256,14 +284,14 @@ def main() -> None:
         .appName("polarify-spark-bench")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.adaptive.enabled", "true")
-        # sized well above the workload: the query sweep accumulates cached
-        # tables and localCheckpoint blocks across the whole query registry, and a tight
-        # heap shows up as multi-second GC spikes attributed to whichever
-        # query is running when the collector fires
-        .config("spark.driver.memory", "32g")
+        # the sweep accumulates cached tables and localCheckpoint blocks
+        # across the whole query registry; a heap too tight for them shows
+        # up as multi-second GC spikes attributed to whichever query is
+        # running when the collector fires (driver_gc_sec reports the total)
+        .config("spark.driver.memory", f"{heap_gb}g")
         # the sweep churns ~130 queries' localCheckpoint blocks through one
         # JVM; ContextCleaner only frees a block after a DRIVER GC proves
-        # the RDD unreachable, and with a 32 g heap a full GC can be tens
+        # the RDD unreachable, and with a large heap a full GC can be tens
         # of queries away — dead blocks then pile up and inflate whichever
         # query runs late in a family (r7: repeated_spans 17.6 s in-sweep
         # vs 1.2 s standalone). A 30 s periodic GC bounds that drift.
@@ -500,6 +528,8 @@ def main() -> None:
         "value_band": [min(total, total2), max(total, total2)],
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": _sf_from_dir(SF_DIR),
+        "driver_heap_gb": heap_gb,
+        "driver_gc_sec": _driver_gc_sec(spark),
         "n_queries": len(timings),
         "families_band": families_band,
         "transpile_ms_per_func": round(transpile_ms, 3),

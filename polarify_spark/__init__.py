@@ -44,8 +44,7 @@ from .transpiler import (
     TranspileError,
     allow_boolops as _allow_boolops,
     allow_chained_comparisons as _allow_chained,
-    branch_tree_to_expr,
-    compile_block,
+    compile_function,
 )
 
 __version__ = "0.2.0"  # kept in sync with pyproject.toml
@@ -67,7 +66,7 @@ def _compiled_function_def(
     rewrite_chained: bool = False,
 ) -> ast.Module:
     """Parse ``func``'s source and replace its body with the compiled
-    single-expression form. Returns the full module AST."""
+    vectorized body. Returns the full module AST."""
     try:
         source = inspect.getsource(func)
     except (OSError, TypeError) as exc:  # e.g. defined in a REPL
@@ -80,7 +79,7 @@ def _compiled_function_def(
     token = _allow_boolops.set(rewrite_boolops)
     token_chained = _allow_chained.set(rewrite_chained)
     try:
-        expr = branch_tree_to_expr(compile_block(func_def.body))
+        body = compile_function(func_def)
     finally:
         _allow_chained.reset(token_chained)
         _allow_boolops.reset(token)
@@ -92,7 +91,7 @@ def _compiled_function_def(
         ast.ImportFrom(
             module="pyspark.sql", names=[ast.alias(name="functions", asname="F")], level=0
         ),
-        ast.Return(value=expr),
+        *body,
     ]
     func_def.decorator_list = []
     func_def.name += _SUFFIX
@@ -110,6 +109,14 @@ def transform_func_to_new_source(
 
     Introspection/debugging aid; the decorator uses the same pipeline
     (reference ``transform_func_to_new_source``, ``__init__.py:17-37``).
+    Where the reference always emits a single ``return <expr>``, a function
+    with fall-through conditionals here yields let-bound temporaries
+    (``_let_0 = F.when(...)...``) before its one ``return``: the conditionals
+    are merged instead of copied into every later branch, so the source grows
+    linearly in the number of sequential ``if``/``match`` statements. A
+    function whose merged form Catalyst would unfold into a much larger tree
+    than the distributed one (see ``transpiler._MERGE_FACTOR``) keeps the
+    reference's single ``return``.
     """
     return ast.unparse(
         _compiled_function_def(

@@ -122,10 +122,219 @@ def unconditional_const_after_branch(x):
     return 1
 
 
+def const_after_merged_branch(x):
+    # the merged branch binds Columns, then a constant is returned: F.lit
+    # keeps the result a Column, as the distributed when-chain was
+    y = x
+    if x > 0:
+        y = x * 2
+    return 7
+
+
 def conditional_const_return(x):
     if x > 0:
         return 1
     return 0
+
+
+# --- S5 / S8 merge fallbacks: later statements distribute into the arms ------
+
+
+def fallback_arm_returns(x):
+    s = x
+    if x > 5:
+        return s * 2
+    elif x < -5:
+        s = -x
+    if s > 3:
+        s = s - 3
+    return s
+
+
+def fallback_arm_binds_extra_name(x):
+    s = 1
+    if x > 0:
+        t = x * 2
+        s = t + 1
+    else:
+        s = -x
+    if s > 4:
+        s = s - 4
+    return s
+
+
+def fallback_match_capture(x):
+    s = 0
+    match x:
+        case 1:
+            s = x + 9
+        case y if y > 5:
+            s = y * 2
+        case _:
+            s = -x
+    if s > 8:
+        s = s - 8
+    return s
+
+
+def rebind_parameter(x):
+    y = x + 1
+    if x > 3:
+        x = x - 3
+    x = x * 2
+    return x + y
+
+
+# --- S5 growth pin: sequential dependent if/elif pairs -----------------------
+
+
+def chain_of_eight_pairs(a, p, q):
+    x = a + p - q
+    if a > 40:
+        x = x - 3 * p
+    elif p < 0:
+        x = a + 5 * q
+    if q > 2:
+        x = x - 2 * q
+    elif a < -30:
+        x = q + 4 * p
+    if p > 1:
+        x = x - 6 * p
+    elif q < 0:
+        x = a + 3 * q
+    if a > 10:
+        x = x - 5 * q
+    elif a < -10:
+        x = p + 2 * a
+    if q > 0:
+        x = x - 4 * p
+    elif p < -2:
+        x = a + 6 * q
+    if a > 25:
+        x = x - 3 * q
+    elif q < -1:
+        x = q + 5 * p
+    if p > 0:
+        x = x - 2 * p
+    elif a < -45:
+        x = a + 4 * q
+    if a > 5:
+        x = x - 6 * q
+    elif q < 1:
+        x = p + 3 * a
+    return x
+
+
+# --- S5 merge vs distribution: chains whose tests read the merged value ------
+# Catalyst copies a temporary into each use. Each pair below reads the
+# previous x five times (two tests, three values), so merging n pairs
+# unfolds to ~5^n copies against ~3^n distributed paths: four pairs merge,
+# seven compile like the reference.
+
+
+def chain_of_four_pairs(a, p, q):
+    x = a + p - q
+    if x > 40:
+        x = x - 3 * p
+    elif x < -40:
+        x = x + 5 * q
+    if x > 30:
+        x = x - 2 * q
+    elif x < -30:
+        x = x + 4 * p
+    if x > 20:
+        x = x - 6 * p
+    elif x < -20:
+        x = x + 3 * q
+    if x > 10:
+        x = x - 5 * q
+    elif x < -10:
+        x = x + 2 * p
+    return x
+
+
+def chain_of_seven_pairs(a, p, q):
+    x = a + p - q
+    if x > 40:
+        x = x - 3 * p
+    elif x < -40:
+        x = x + 5 * q
+    if x > 30:
+        x = x - 2 * q
+    elif x < -30:
+        x = x + 4 * p
+    if x > 20:
+        x = x - 6 * p
+    elif x < -20:
+        x = x + 3 * q
+    if x > 10:
+        x = x - 5 * q
+    elif x < -10:
+        x = x + 2 * p
+    if x > 35:
+        x = x - 4 * p
+    elif x < -35:
+        x = x + 6 * q
+    if x > 25:
+        x = x - 3 * q
+    elif x < -25:
+        x = x + 5 * p
+    if x > 15:
+        x = x - 2 * p
+    elif x < -15:
+        x = x + 4 * q
+    return x
+
+
+def guarded_steps(x):
+    # each step reads x six times and has two paths: merged, five steps
+    # unfold ~24x larger than the distributed tree, so they distribute
+    if (x > -50) & (x < 50) & (x != 7) & (x != -7):
+        x = x * 2 - 3
+    if (x > -50) & (x < 50) & (x != 7) & (x != -7):
+        x = x * 2 - 3
+    if (x > -50) & (x < 50) & (x != 7) & (x != -7):
+        x = x * 2 - 3
+    if (x > -50) & (x < 50) & (x != 7) & (x != -7):
+        x = x * 2 - 3
+    if (x > -50) & (x < 50) & (x != 7) & (x != -7):
+        x = x * 2 - 3
+    return x
+
+
+# --- S5 merge: arms that bind plain Python values distribute ----------------
+# Their originals build Columns (`F` is bound in the generated function), so
+# they are checked in Spark against hand-written row values.
+
+
+def conditional_column_name(x):
+    name = "a"
+    if x > 0:
+        name = "b"
+    return F.col(name) + x
+
+
+def conditional_round_scale(x):
+    d = 1
+    if x > 0:
+        d = 2
+    return F.round(x / 7, d)
+
+
+def conditional_function(x):
+    op = F.abs
+    if x > 5:
+        op = F.negative
+    return op(x)
+
+
+def conditional_scale_from_argument(x, n):
+    # n arrives as a plain int; the merged temporary would be a Column
+    if x > 0:
+        k = n + 1
+    else:
+        k = n
+    return F.round(x / 7, k)
 
 
 # --- S1-S4: assignment forms ------------------------------------------------
@@ -564,7 +773,12 @@ VECTORIZABLE = [
     three_sequential_ifs,
     assign_after_branch,
     unconditional_const_after_branch,
+    const_after_merged_branch,
     conditional_const_return,
+    fallback_arm_returns,
+    fallback_arm_binds_extra_name,
+    fallback_match_capture,
+    rebind_parameter,
     straight_line,
     negate,
     annotated,

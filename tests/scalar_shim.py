@@ -2,12 +2,13 @@
 evaluated row-wise in pure Python.
 
 The transpiler emits ``F.when(cond, val).when(...).otherwise(val)`` where the
-only ``F`` members used are ``when``. When every input is a plain Python
-scalar, conditions evaluate to real booleans, so a tiny first-match-wins
-evaluator reproduces Spark ``CaseWhen`` semantics exactly (for non-null
-inputs). This lets hypothesis drive thousands of examples per corpus function
-without a SparkSession; the Spark integration test then re-checks a dense
-sample end-to-end on the JVM.
+only ``F`` members used are ``when`` and ``lit`` (which wraps a constant
+returned after a merged branch so the result stays a Column). When every
+input is a plain Python scalar, conditions evaluate to real booleans, so a
+tiny first-match-wins evaluator reproduces Spark ``CaseWhen`` semantics
+exactly (for non-null inputs). This lets hypothesis drive thousands of
+examples per corpus function without a SparkSession; the Spark integration
+test then re-checks a dense sample end-to-end on the JVM.
 """
 
 from __future__ import annotations
@@ -35,6 +36,10 @@ class ScalarF:
     @staticmethod
     def when(cond: Any, value: Any) -> _ScalarCase:
         return _ScalarCase(((cond, value),))
+
+    @staticmethod
+    def lit(value: Any) -> Any:
+        return value
 
 
 def run_scalar(generated_source: str, func_name: str, host_globals: dict, *args: Any) -> Any:

@@ -2,10 +2,11 @@
 
 Hypothesis composes arbitrary small if/assign/return programs (the
 statement and expression grammar the transpiler supports), transpiles each
-through the low-level API (``compile_block`` -> ``branch_tree_to_expr``),
-and checks the generated when-chain — evaluated row-wise through the
-scalar shim — against plain-Python execution of the original program over
-a dense integer domain. This exercises the branch-distribution /
+through the low-level API (``compile_function``), and checks the generated
+body — let-bound ``_let_N = F.when(...)`` temporaries from merged
+conditionals, then one ``return`` — evaluated row-wise through the scalar
+shim against plain-Python execution of the original program over a dense
+integer domain. This exercises the branch-merging / branch-distribution /
 early-return / substitution machinery on shapes nobody hand-wrote.
 
 A thin Spark layer re-checks a fixed sample of generated programs through
@@ -19,7 +20,7 @@ import ast
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from polarify_spark.transpiler import TranspileError, branch_tree_to_expr, compile_block
+from polarify_spark.transpiler import TranspileError, compile_function
 
 from .scalar_shim import ScalarF
 
@@ -99,9 +100,17 @@ def programs(draw) -> str:
 
 
 def _transpile_to_source(src: str) -> str:
-    fn = ast.parse(src).body[0]
-    tree = compile_block(fn.body, {})
-    return ast.unparse(ast.fix_missing_locations(branch_tree_to_expr(tree)))
+    """The generated function: ``src``'s signature over the compiled body."""
+    module = ast.parse(src)
+    fn = module.body[0]
+    fn.body = compile_function(fn)
+    return ast.unparse(ast.fix_missing_locations(module))
+
+
+def _generated_function(gen_src: str, F):
+    ns: dict = {"F": F}
+    exec(gen_src, ns)  # noqa: S102 — transpiler output under test
+    return ns["f"]
 
 
 def _python_reference(src: str):
@@ -120,8 +129,9 @@ def test_random_programs_scalar_equivalence(src):
         # the generator can build e.g. a program whose branches don't all
         # return only via dead code; any rejection must be this typed error
         return
+    generated = _generated_function(gen_src, ScalarF())
     for x in DOMAIN:
-        got = eval(gen_src, {"F": ScalarF()}, {"x": x})  # noqa: S307
+        got = generated(x)
         want = ref(x)
         assert got == want, (src, gen_src, x, got, want)
 
@@ -143,7 +153,7 @@ def test_random_program_shapes_match_catalyst(spark):
     for src in _SPARK_SAMPLE_SEEDS:
         ref = _python_reference(src)
         gen_src = _transpile_to_source(src)
-        col = eval(gen_src, {"F": F}, {"x": F.col("x")})  # noqa: S307
+        col = _generated_function(gen_src, F)(F.col("x"))
         rows = df.select("x", col.alias("v")).collect()
         for r in rows:
             assert r["v"] == ref(r["x"]), (src, r["x"])

@@ -237,3 +237,144 @@ def test_transpile_is_deterministic():
         assert transform_func_to_new_source(func) == transform_func_to_new_source(
             func
         )
+
+
+def test_sequential_branches_grow_linearly():
+    """Eight sequential dependent if/elif pairs merge into let-bound
+    temporaries: the generated source grows linearly, not 3^n (distributing
+    every later pair into every open leaf produces ~0.3 MB here)."""
+    import time
+
+    from .corpus import chain_of_eight_pairs
+
+    start = time.perf_counter()
+    generated = transform_func_to_new_source(chain_of_eight_pairs)
+    elapsed = time.perf_counter() - start
+    assert elapsed < 0.05, f"transpile took {elapsed * 1e3:.1f} ms"
+    assert len(generated) < 10_000, len(generated)
+    assert "_let_" in generated
+    name = chain_of_eight_pairs.__name__ + _SUFFIX
+    for a in range(-60, 61, 3):
+        for p in (-4, 0, 3):
+            for q in (-2, 1, 5):
+                got = run_scalar(generated, name, chain_of_eight_pairs.__globals__, a, p, q)
+                assert got == chain_of_eight_pairs(a, p, q), (a, p, q)
+
+
+def test_merge_yields_to_distribution_past_catalyst_unfolding():
+    """Catalyst copies a temporary into each of its uses. Where that copied
+    tree would be more than `_MERGE_FACTOR` times the distributed one (seven
+    pairs that test x, or five wide guards) the function compiles without
+    merging, as the reference does; four pairs that test x still merge."""
+    from .corpus import chain_of_four_pairs, chain_of_seven_pairs, guarded_steps
+
+    lines = transform_func_to_new_source(chain_of_four_pairs).splitlines()
+    assert sum(line.lstrip().startswith("_let_") for line in lines) == 3
+    assert "_let_" not in transform_func_to_new_source(guarded_steps)
+    generated = transform_func_to_new_source(chain_of_seven_pairs)
+    assert "_let_" not in generated
+    name = chain_of_seven_pairs.__name__ + _SUFFIX
+    for a in range(-60, 61, 6):
+        for p, q in ((-4, 5), (3, -2)):
+            got = run_scalar(generated, name, chain_of_seven_pairs.__globals__, a, p, q)
+            assert got == chain_of_seven_pairs(a, p, q), (a, p, q)
+
+
+def test_sequential_branches_spark_select(spark):
+    """Both sides of the merge/distribute choice through one Spark select,
+    row by row: the merged eight- and four-pair chains and the distributed
+    guards. (The distributed seven-pair chain is pinned above through the
+    scalar shim only: its 245 kB plan overflows codegen and takes minutes in
+    Spark, at the reference's output as here.)"""
+    from pyspark.sql import functions as F
+
+    from .corpus import chain_of_eight_pairs, chain_of_four_pairs, guarded_steps
+
+    eight, four, guards = (
+        sparkify(f) for f in (chain_of_eight_pairs, chain_of_four_pairs, guarded_steps)
+    )
+    df = spark.createDataFrame(
+        [(a, p, q) for a in range(-60, 61, 3) for p in (-4, 0, 3) for q in (-2, 1, 5)],
+        "a long, p long, q long",
+    )
+    args = (F.col("a"), F.col("p"), F.col("q"))
+    rows = df.select(
+        "a", "p", "q",
+        eight(*args).alias("eight"), four(*args).alias("four"), guards(F.col("a")).alias("guards"),
+    ).collect()
+    assert len(rows) == 41 * 9
+    for r in rows:
+        assert r["eight"] == chain_of_eight_pairs(r["a"], r["p"], r["q"]), r
+        assert r["four"] == chain_of_four_pairs(r["a"], r["p"], r["q"]), r
+        assert r["guards"] == guarded_steps(r["a"]), r
+
+
+def test_plain_value_arms_distribute(spark):
+    """Arms that bind a column name, a `round` scale or a function keep
+    them plain Python values: the conditional distributes rather than merge
+    them into a `F.when` Column. So does one whose values read an argument
+    the caller passes as an int, because the merged name reaches a call."""
+    from pyspark.sql import functions as F
+
+    from .corpus import (
+        conditional_column_name,
+        conditional_function,
+        conditional_round_scale,
+        conditional_scale_from_argument,
+    )
+
+    funcs = (conditional_column_name, conditional_round_scale, conditional_function)
+    for func in (*funcs, conditional_scale_from_argument):
+        assert "_let_" not in transform_func_to_new_source(func)
+    name, scale, fn = (sparkify(f) for f in funcs)
+    scale_arg = sparkify(conditional_scale_from_argument)
+    df = spark.createDataFrame(
+        [(x, 100 + x, 200 - x) for x in range(-20, 21)], "x long, a long, b long"
+    )
+    x = F.col("x")
+    rows = df.select(
+        "x", "a", "b",
+        name(x).alias("name"), scale(x).alias("scale"), fn(x).alias("fn"),
+        scale_arg(x, 2).alias("scale_arg"),
+    ).collect()
+    assert len(rows) == 41
+    for r in rows:
+        v = r["x"]
+        assert r["name"] == (r["b"] if v > 0 else r["a"]) + v, r
+        assert r["scale"] == pytest.approx(round(v / 7, 2 if v > 0 else 1), abs=1e-12), r
+        assert r["fn"] == (-v if v > 5 else abs(v)), r
+        assert r["scale_arg"] == pytest.approx(round(v / 7, 3 if v > 0 else 2), abs=1e-12), r
+
+
+def test_merge_fallbacks_distribute_later_statements():
+    """A conditional with a returning arm, or whose arms bind different
+    names, is not merged: the following `if` is copied into each open leaf
+    (equivalence of these functions is pinned through the corpus tests)."""
+    from .corpus import fallback_arm_binds_extra_name, fallback_match_capture
+
+    assert transform_func_to_new_source(fallback_arm_binds_extra_name).count("> 4") == 2
+    assert transform_func_to_new_source(fallback_match_capture).count("> 8") == 3
+
+
+def test_reserved_temporary_prefix_is_rejected():
+    """Generated temporaries are named `_let_N`; a function that uses the
+    prefix for a parameter, a local or a global it reads is rejected."""
+    from polarify_spark import TranspileError
+
+    def param(_let_x):
+        return _let_x + 1
+
+    def local(x):
+        _let_0 = x + 1
+        if x > 0:
+            _let_0 = 2
+        return _let_0
+
+    def reads_global(x):
+        if x > 0:
+            return _let_scale * x  # noqa: F821 — resolved at call time only
+        return x
+
+    for func in (param, local, reads_global):
+        with pytest.raises(TranspileError, match="_let_"):
+            transform_func_to_new_source(func)

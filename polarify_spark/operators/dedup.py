@@ -2018,19 +2018,6 @@ SELECT doc_id, COUNT(*) AS n_triangles FROM nodes GROUP BY 1
 # --- embedding cosine near-dup ---------------------------------------------
 
 
-def _dot(a: "Column", b: "Column") -> "Column":
-    """Double-precision dot product of two float arrays, JVM-side:
-    aggregate over zip_with (accumulates left-to-right, matching the
-    index-ordered oracle)."""
-    from pyspark.sql import functions as F
-
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Embedding-cosine near-duplicates >= threshold, blocked on the
     *data-driven* IVF cell from ``operators.similarity._cell_assignment``
@@ -2043,7 +2030,7 @@ def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     dims is engine-identical well past that precision."""
     from pyspark.sql import functions as F
 
-    from .similarity import _cell_assignment
+    from .similarity import _cell_assignment, _cosine, _norm
 
     # precompute each vector's norm once — recomputing it per pair would
     # triple the inner-loop flops of the quadratic stage; repartition on the
@@ -2055,16 +2042,14 @@ def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
             "vec_id",
             "cell_id",
             "embedding",
-            F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
+            _norm("embedding").alias("norm"),
         )
         .repartition(parallelism, "cell_id")
         .cache()
     )
     a = emb.alias("a")
     b = emb.alias("b")
-    cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.norm") * F.col("b.norm")
-    )
+    cos = _cosine("a.embedding", "b.embedding", "a.norm", "b.norm")
     return (
         a.join(
             b,

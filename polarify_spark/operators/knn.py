@@ -29,6 +29,15 @@ Scale shapes (100 TB, 1000 executors) by method:
 Output is always (q_id, neighbor_id, cosine, rank) with cosine rounded to
 4 decimals and rank ties broken by neighbor id — deterministic and
 oracle-checkable, like every similarity operator.
+
+Scoring cost: every method (and :func:`search_ivf_index`) computes each
+vector's norm ONCE, in a projection below the pairing join, so a scored
+pair costs one dot-product fold; centroid ranking carries each centroid's
+norm in its broadcast struct. The vector kernels are Spark-SQL text from
+``operators.similarity``, each turned into a Column by a single ``F.expr``
+call, and evaluate the same double operations in the same order as the
+per-pair ``dot / (sqrt(dot) * sqrt(dot))`` fold — results are
+bit-identical to it.
 """
 
 from __future__ import annotations
@@ -45,6 +54,9 @@ from .similarity import (
     _bucket_expr,
     _cosine,
     _emb,
+    _norm,
+    _ranked_by_centroid,
+    _seed_centroids,
 )
 
 if TYPE_CHECKING:
@@ -56,51 +68,6 @@ if TYPE_CHECKING:
 KNN_QUERY_LO = N_QUERIES + N_CELLS
 KNN_QUERY_HI = KNN_QUERY_LO + 16
 KNN_TOP_K = 5
-
-
-def _ranked_by_centroid(
-    side: "DataFrame", centroids: "DataFrame"
-) -> "DataFrame":
-    """(id, vec, cell_id, cell_cos, rn): every input row scored against
-    every centroid and ranked per row by (rounded cosine desc, cell_id
-    asc), mirroring the oracle's assignment CTE exactly — with ZERO side
-    shuffle: the centroids collapse to a 1-row broadcast array, each row
-    scores and sorts its own (cos, cell) list map-side, and posexplode
-    emits the ranking. This is ``similarity._cell_ranked``'s measured
-    shape (r18 audit): the previous broadcast-join + row_number window
-    planned an Exchange on ``id`` over |side| x |centroids| rows just to
-    rank a bounded-size list — a side-sized shuffle in every IVF index
-    build and serve, pure overhead at any scale. Sort key
-    (cell_cos desc, -cell_id desc) == the old window's
-    (cell_cos desc, cell_id asc), on the same round-4 values."""
-    from pyspark.sql import functions as F
-
-    cents = centroids.select(
-        F.struct(F.col("cell_id"), F.col("cent_vec")).alias("c")
-    ).agg(F.collect_list("c").alias("cents"))
-    ranked = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_cosine(F.col("vec"), c["cent_vec"]), 4).alias(
-                    "cell_cos"
-                ),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )
-    return (
-        side.crossJoin(F.broadcast(cents))
-        .select("id", "vec", F.posexplode(ranked).alias("pos", "s"))
-        .select(
-            "id",
-            "vec",
-            (-F.col("s.neg_cell_id")).alias("cell_id"),
-            F.col("s.cell_cos").alias("cell_cos"),
-            (F.col("pos") + 1).cast("int").alias("rn"),
-        )
-    )
 
 
 def knn_join(
@@ -140,20 +107,11 @@ def knn_join(
     exclude self by construction.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    q = queries.select(
-        F.col(query_id).alias("id"), F.col(query_vec).alias("vec")
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("vec")
-    )
+    qs = _scoring_side(queries, query_id, query_vec, "q_id", "q")
+    cs = _scoring_side(corpus, corpus_id, corpus_vec, "neighbor_id", "c")
 
     if method == "bruteforce":
-        qs = q.select(F.col("id").alias("q_id"), F.col("vec").alias("q_vec"))
-        cs = c.select(
-            F.col("id").alias("neighbor_id"), F.col("vec").alias("c_vec")
-        )
         # the query block is the broadcast-sized side by contract here —
         # a corpus-sized query table should use an index method, whose
         # equi-join shuffles co-partitioned instead
@@ -165,47 +123,54 @@ def knn_join(
                 "cent_vec) — train one with similarity.kmeans_centroids"
             )
         qs = (
-            _ranked_by_centroid(q, centroids)
+            _ranked_by_centroid(qs, centroids, "q_vec", "q_norm")
             .where(F.col("rn") <= probes)
-            .select(
-                F.col("id").alias("q_id"),
-                F.col("vec").alias("q_vec"),
-                "cell_id",
-            )
+            .select("q_id", "q_vec", "q_norm", "cell_id")
         )
         cs = (
-            _ranked_by_centroid(c, centroids)
+            _ranked_by_centroid(cs, centroids, "c_vec", "c_norm")
             .where(F.col("rn") == 1)
-            .select(
-                F.col("id").alias("neighbor_id"),
-                F.col("vec").alias("c_vec"),
-                "cell_id",
-            )
+            .select("neighbor_id", "c_vec", "c_norm", "cell_id")
         )
         # equi-join on the cell: a corpus vector lives in exactly one cell
         # and a query's probe cells are distinct, so no candidate dedup
         scored = cs.join(qs, "cell_id")
     elif method == "rplsh":
-        qs = q.select(
-            F.col("id").alias("q_id"),
-            F.col("vec").alias("q_vec"),
-            _bucket_expr(F.col("vec")).alias("bucket"),
-        )
-        cs = c.select(
-            F.col("id").alias("neighbor_id"),
-            F.col("vec").alias("c_vec"),
-            _bucket_expr(F.col("vec")).alias("bucket"),
-        )
+        qs = qs.select("*", _bucket_expr("q_vec").alias("bucket"))
+        cs = cs.select("*", _bucket_expr("c_vec").alias("bucket"))
         scored = cs.join(qs, "bucket")
     else:
         raise ValueError(
             f"unknown method {method!r}; expected 'bruteforce', 'ivf' or 'rplsh'"
         )
+    return _top_k(scored, k)
 
-    scored = scored.select(
+
+def _scoring_side(
+    df: "DataFrame", id_col: str, vec_col: str, id_as: str, p: str, *keep: str
+) -> "DataFrame":
+    """(id_as, {p}_vec, {p}_norm, *keep): one side of a pairing join, its
+    vector norm computed here, once per row, below the join."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).alias(f"{p}_vec"), *keep
+    ).select("*", _norm(f"{p}_vec").alias(f"{p}_norm"))
+
+
+def _top_k(pairs: "DataFrame", k: int) -> "DataFrame":
+    """(q_id, neighbor_id, cosine, rank) from candidate pairs carrying
+    (q_vec, q_norm, c_vec, c_norm): one dot-product fold per pair, then the
+    per-query rank by (cosine desc, neighbor_id asc)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    scored = pairs.select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec", "q_norm", "c_norm"), 4).alias(
+            "cosine"
+        ),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -298,7 +263,6 @@ def search_ivf_index(
     probed cells' directories are the only ones read. Returns the same
     (q_id, neighbor_id, cosine, rank) contract as :func:`knn_join`."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     handles = _index_marker_fs(spark, path)
     if handles is not None:
@@ -311,30 +275,18 @@ def search_ivf_index(
             )
     cents = spark.read.parquet(f"{path}/centroids")
     assigned = spark.read.parquet(f"{path}/assignments")
-    q = queries.select(
-        F.col(query_id).alias("id"), F.col(query_vec).alias("vec")
-    )
     qs = (
-        _ranked_by_centroid(q, F.broadcast(cents))
-        .where(F.col("rn") <= probes)
-        .select(
-            F.col("id").alias("q_id"), F.col("vec").alias("q_vec"), "cell_id"
+        _ranked_by_centroid(
+            _scoring_side(queries, query_id, query_vec, "q_id", "q"),
+            F.broadcast(cents),
+            "q_vec",
+            "q_norm",
         )
+        .where(F.col("rn") <= probes)
+        .select("q_id", "q_vec", "q_norm", "cell_id")
     )
-    cs = assigned.select(
-        F.col("id").alias("neighbor_id"), F.col("vec").alias("c_vec"), "cell_id"
-    )
-    scored = cs.join(F.broadcast(qs), "cell_id").select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
-    )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= k
-    )
+    cs = _scoring_side(assigned, "id", "vec", "neighbor_id", "c", "cell_id")
+    return _top_k(cs.join(F.broadcast(qs), "cell_id"), k)
 
 
 # --- registered demo queries (oracle-checked) -------------------------------
@@ -392,7 +344,7 @@ _INDEX_DIRS: list = []
 
 #: bounded wait for in-flight index builds during cleanup: at interpreter
 #: exit (atexit) a build thread wedged inside a hung Spark job must not
-#: block process shutdown forever. Since r10 (ADVICE r9) this is a SHARED
+#: block process shutdown forever. This is ONE SHARED
 #: deadline across all build locks — worst-case shutdown delay is this
 #: bound, not bound x len(locks) — and an unacquirable lock skips only
 #: the dirs tied to ITS key (plus any dir not yet memo-mapped, which an
@@ -448,7 +400,7 @@ def _cleanup_index_dirs() -> None:
             else:
                 blocked.add(key)
         if blocked:
-            # refresh dir_key AFTER the acquisition loop (ADVICE r10): a
+            # refresh dir_key AFTER the acquisition loop: a
             # build that completed during the up-to-10 s wait inserted its
             # memo entry after the entry snapshot, and the stale map would
             # classify its finished dir 'unmapped' — skipped whenever any
@@ -469,20 +421,6 @@ def _cleanup_index_dirs() -> None:
     finally:
         for lock in acquired:
             lock.release()
-
-
-def _seed_centroids(emb: "DataFrame") -> "DataFrame":
-    """The module's deterministic seed centroids (shared with the in-memory
-    IVF demo query): embeddings vec_id in [N_QUERIES, N_QUERIES+N_CELLS)."""
-    from pyspark.sql import functions as F
-
-    return emb.where(
-        (F.col("vec_id") >= N_QUERIES)
-        & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
 
 
 def _served_index_path(spark: "SparkSession", sf_dir: str) -> str:

@@ -495,7 +495,7 @@ def hybrid_rrf_search(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     sem_scored = emb.crossJoin(F.broadcast(cent)).select(
         "query_id",
         F.col("vec_id").alias("doc_id"),
-        F.round(_cosine(F.col("q_vec"), F.col("embedding")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "embedding"), 4).alias("cosine"),
     )
     sem_w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("doc_id").asc()

@@ -56,25 +56,119 @@ def _emb(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _dot(a: "Column", b: "Column") -> "Column":
-    from pyspark.sql import functions as F
+# --- vector kernels -----------------------------------------------------------
+# Every kernel is Spark-SQL text over column names (or SQL expressions such
+# as ``c.cent_vec`` inside a lambda), turned into a Column by ONE ``F.expr``
+# call: the equivalent Column-DSL tree costs hundreds of py4j round trips
+# per kernel. The fold is the one double-precision left-to-right dot
+# product; the analyzer builds the same expression tree as the DSL did, so
+# every result is bit-identical to it. (Unrolling the dot over EMB_DIM for
+# codegen measured 2-3x slower: ~600 nodes per cosine overflow the
+# whole-stage-codegen method budget.)
 
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+
+def _dot_sql(a: str, b: str) -> str:
+    """Dot product of two float arrays, accumulated in double from index 0
+    up — the index-ordered sum the DuckDB oracles compute."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v)"
     )
 
 
-def _cosine(a: "Column", b: "Column") -> "Column":
-    """Cosine via the zip_with+aggregate fold. (Unrolling the dot over
-    EMB_DIM for codegen was tried and measured 2-3x SLOWER across every
-    scoring path: ~600 expression nodes per cosine blow past the
-    whole-stage-codegen method budget and fall back worse than the
-    interpreted HOF. Don't repeat it.)"""
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def _cosine_sql(
+    a: str, b: str, a_norm: "str | None" = None, b_norm: "str | None" = None
+) -> str:
+    return (
+        f"{_dot_sql(a, b)} / "
+        f"({a_norm or _norm_sql(a)} * {b_norm or _norm_sql(b)})"
+    )
+
+
+def _norm(a: str) -> "Column":
+    """sqrt(dot(a, a)): compute it once per vector, below any pairing join,
+    and pass its column name to :func:`_cosine`."""
     from pyspark.sql import functions as F
 
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    return F.expr(_norm_sql(a))
+
+
+def _cosine(
+    a: str, b: str, a_norm: "str | None" = None, b_norm: "str | None" = None
+) -> "Column":
+    """dot(a, b) / (|a| * |b|) over column names. With ``a_norm``/``b_norm``
+    (columns holding :func:`_norm` of each side) a pair costs ONE fold
+    instead of three; the norms hold the same doubles the inline
+    ``sqrt(dot(x, x))`` would, so the cosine is bit-identical either way."""
+    from pyspark.sql import functions as F
+
+    return F.expr(_cosine_sql(a, b, a_norm, b_norm))
+
+
+def _seed_centroids(emb: "DataFrame") -> "DataFrame":
+    """(cell_id, cent_vec): the module's deterministic seed centroids,
+    embeddings vec_id in [N_QUERIES, N_QUERIES + N_CELLS)."""
+    from pyspark.sql import functions as F
+
+    return emb.where(
+        (F.col("vec_id") >= N_QUERIES)
+        & (F.col("vec_id") < N_QUERIES + N_CELLS)
+    ).select(
+        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
+        F.col("embedding").alias("cent_vec"),
+    )
+
+
+def _ranked_by_centroid(
+    side: "DataFrame",
+    centroids: "DataFrame",
+    vec: str = "vec",
+    norm: "str | None" = None,
+) -> "DataFrame":
+    """``side``'s columns plus (cell_id, cell_cos, rn): every row scored
+    against every centroid of ``centroids`` (cell_id, cent_vec) and ranked
+    per row by (4-decimal cosine desc, cell_id asc) — the oracles'
+    assignment CTE order. rn=1 is the home cell, rn<=P the probe set.
+
+    Norms are computed once per vector: ``norm`` names a column of ``side``
+    holding :func:`_norm` of ``vec`` (computed here when omitted), and each
+    centroid carries its ``cent_norm`` in the broadcast struct, so a row
+    costs one fold per centroid plus one for its own norm. The ranking
+    needs no shuffle: the centroids collapse to a 1-row broadcast array,
+    each row sorts its own (cos, -cell_id) list with one SQL kernel
+    (``sort_array(transform(...))``, built by a single ``F.expr``) and
+    ``posexplode`` emits the ranks."""
+    from pyspark.sql import functions as F
+
+    cols = side.columns
+    if norm is None:
+        norm = "_vec_norm"
+        side = side.select(*cols, _norm(vec).alias(norm))
+    cents = centroids.select(
+        F.struct(
+            "cell_id", "cent_vec", _norm("cent_vec").alias("cent_norm")
+        ).alias("c")
+    ).agg(F.collect_list("c").alias("cents"))
+    cos = _cosine_sql(vec, "c.cent_vec", norm, "c.cent_norm")
+    ranked = F.expr(
+        f"sort_array(transform(cents, c -> named_struct("
+        f"'cell_cos', round({cos}, 4), 'neg_cell_id', -c.cell_id)), false)"
+    )
+    return (
+        side.crossJoin(F.broadcast(cents))
+        .select(*cols, F.posexplode(ranked).alias("pos", "s"))
+        .select(
+            *cols,
+            (-F.col("s.neg_cell_id")).alias("cell_id"),
+            F.col("s.cell_cos").alias("cell_cos"),
+            (F.col("pos") + 1).cast("int").alias("rn"),
+        )
+    )
 
 
 def topk_bruteforce(
@@ -101,7 +195,7 @@ def topk_bruteforce(
         .select(
             "q_id",
             "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+            F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
         )
     )
     rank_window = Window.partitionBy("q_id").orderBy(
@@ -141,68 +235,21 @@ def _cell_ranked(
 ) -> "DataFrame":
     """Every (vector, centroid) pairing ranked by cosine per vector
     (vec_id in [N_QUERIES, N_QUERIES + N_CELLS) are the fixed seed
-    centroids; ties break on lower cell id). One shuffle-free corpus scan:
-    the centroid list rides along as a 1-row broadcast. rn=1 is the IVF
-    home cell; rn<=P is the probe set for multi-probe queries."""
-    from pyspark.sql import functions as F
-
+    centroids; ties break on lower cell id), as :func:`_ranked_by_centroid`
+    computes it. rn=1 is the IVF home cell; rn<=P is the probe set for
+    multi-probe queries."""
     emb = _emb(spark, sf_dir) if emb is None else emb
-    centroids = (
-        emb.where(
-            (F.col("vec_id") >= N_QUERIES)
-            & (F.col("vec_id") < N_QUERIES + N_CELLS)
-        )
-        .select(
-            F.struct(
-                (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-                F.col("embedding").alias("cent_vec"),
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    # Per-row ranking, ZERO corpus shuffle: the N_CELLS centroids ride
-    # along as a 1-row broadcast array, each vector scores and sorts its
-    # own (cos, cell) list map-side, posexplode emits the ranking. The
-    # previous shape (broadcast join + row_number window) shuffled the
-    # whole corpus on vec_id just to rank a bounded-size list — the one
-    # corpus-sized exchange in the IVF build, and pure overhead at any
-    # scale. Sort key (cell_cos desc, -cell_id desc) == the old window's
-    # (cell_cos desc, cell_id asc), on the same round-4 values.
-    ranked = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(
-                    _cosine(F.col("embedding"), c["cent_vec"]), 4
-                ).alias("cell_cos"),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "embedding",
-            F.posexplode(ranked).alias("pos", "s"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            (-F.col("s.neg_cell_id")).alias("cell_id"),
-            F.col("s.cell_cos").alias("cell_cos"),
-            (F.col("pos") + 1).cast("int").alias("rn"),
-        )
+    scored = _ranked_by_centroid(
+        emb.select("vec_id", "embedding"), _seed_centroids(emb), "embedding"
     )
     # memoized + checkpointed: probe-1, probe-2, the recall harnesses, and
     # the cell-blocked near-dup all derive from this ranking — build it
     # once per corpus and let downstream plans start from the materialized
-    # table instead of re-deriving the broadcast-score-rank lineage
-    # serialized checkpoint (_memo.local_checkpoint): this is N_CELLS x
-    # corpus rows each carrying the full embedding — the largest resident
-    # table in the module, exactly the deserialized-row GC hazard the
-    # storage-level measurements in SCALE.md r11 were about (r18 audit)
+    # table instead of re-deriving the broadcast-score-rank lineage.
+    # Serialized checkpoint (_memo.local_checkpoint): this is N_CELLS x
+    # corpus rows each carrying the full embedding, the largest resident
+    # table in the module (deserialized rows of this size are a GC hazard,
+    # SCALE.md).
     from ._memo import local_checkpoint
 
     memo = _ann_index_memo(emb)
@@ -249,7 +296,7 @@ def topk_ivf(
         .select(
             "q_id",
             "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+            F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
         )
     )
     rank_window = Window.partitionBy("q_id").orderBy(
@@ -350,7 +397,7 @@ def topk_ivf_multiprobe(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -398,18 +445,27 @@ def _plane(j: int) -> list[int]:
     return [((j * 31 + d * 17) % 13) - 6 for d in range(EMB_DIM)]
 
 
-def _bucket_expr(vec: "Column") -> "Column":
-    """256-way signed-random-projection bucket id of an embedding: bit j is
-    sign(dot(v, plane_j)) > 0. Pure array expressions — bucketing the whole
-    corpus is one shuffle-free scan."""
+def _array_sql(coords: list[int]) -> str:
+    """Spark-SQL literal of a plane as array<double>."""
+    return "array(" + ", ".join(f"{c}.0D" for c in coords) + ")"
+
+
+def _bits_sql(vec: str, planes: list[list[int]]) -> str:
+    """Sum over planes i of 2^i where dot(vec, plane_i) > 0."""
+    return "0" + "".join(
+        f" + CASE WHEN {_dot_sql(vec, _array_sql(p))} > 0 THEN {2**i} ELSE 0 END"
+        for i, p in enumerate(planes)
+    )
+
+
+def _bucket_expr(vec: str) -> "Column":
+    """256-way signed-random-projection bucket id of column ``vec``: bit j
+    is sign(dot(v, plane_j)) > 0. One SQL kernel built by a single
+    ``F.expr``, bit-identical to the fold; bucketing the whole corpus is
+    one shuffle-free scan."""
     from pyspark.sql import functions as F
 
-    bucket: "Column" = F.lit(0)
-    for j in range(N_PLANES):
-        plane = F.array(*[F.lit(float(c)) for c in _plane(j)])
-        d = _dot(vec, plane)
-        bucket = bucket + F.when(d > 0, F.lit(2**j)).otherwise(0)
-    return bucket
+    return F.expr(_bits_sql(vec, [_plane(j) for j in range(N_PLANES)]))
 
 
 def _bucketed(
@@ -418,8 +474,6 @@ def _bucketed(
     """(vec_id, embedding, bucket): the corpus with its RP-LSH bucket —
     memoized + checkpointed so the single-probe index, the multi-probe
     index, and the recall harnesses share one materialized bucket table."""
-    from pyspark.sql import functions as F
-
     # serialized checkpoint: a full-corpus table with embeddings resident
     # (see _cell_ranked's storage note)
     from ._memo import local_checkpoint
@@ -433,7 +487,7 @@ def _bucketed(
             emb.select(
                 "vec_id",
                 "embedding",
-                _bucket_expr(F.col("embedding")).alias("bucket"),
+                _bucket_expr("embedding").alias("bucket"),
             )
         ),
     )
@@ -470,7 +524,7 @@ def topk_rplsh(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -502,12 +556,9 @@ def topk_rplsh_multiprobe(
     # lowest-margin plane: index of min |dot(v, plane_j)| (ties -> lower j)
     q = emb.where(F.col("vec_id") < N_QUERIES)
     margins = [
-        F.abs(
-            _dot(
-                F.col("embedding"),
-                F.array(*[F.lit(float(c)) for c in _plane(j)]),
-            )
-        ).alias(f"m{j}")
+        F.expr(f"abs({_dot_sql('embedding', _array_sql(_plane(j)))})").alias(
+            f"m{j}"
+        )
         for j in range(N_PLANES)
     ]
     q = q.select("vec_id", "embedding", "bucket", *margins)
@@ -532,7 +583,7 @@ def topk_rplsh_multiprobe(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -650,18 +701,13 @@ def _table_plane(j: int) -> list[int]:
     return [((j * 37 + d * 23) % 17) - 8 for d in range(EMB_DIM)]
 
 
-def _table_bucket_expr(vec: "Column", t: int) -> "Column":
-    """16-way bucket id of ``vec`` in table t: bit i is
+def _table_bucket_expr(vec: str, t: int) -> "Column":
+    """16-way bucket id of column ``vec`` in table t: bit i is
     sign(dot(v, table_plane(t * TABLE_PLANES + i))) > 0."""
     from pyspark.sql import functions as F
 
-    bucket: "Column" = F.lit(0)
-    for i in range(TABLE_PLANES):
-        plane = F.array(
-            *[F.lit(float(c)) for c in _table_plane(t * TABLE_PLANES + i)]
-        )
-        bucket = bucket + F.when(_dot(vec, plane) > 0, F.lit(2**i)).otherwise(0)
-    return bucket
+    planes = [_table_plane(t * TABLE_PLANES + i) for i in range(TABLE_PLANES)]
+    return F.expr(_bits_sql(vec, planes))
 
 
 def _multitable_bucketed(
@@ -689,7 +735,7 @@ def _multitable_bucketed(
                 F.posexplode(
                     F.array(
                         *[
-                            _table_bucket_expr(F.col("embedding"), t)
+                            _table_bucket_expr("embedding", t)
                             for t in range(N_TABLES)
                         ]
                     )
@@ -737,7 +783,7 @@ def topk_rplsh_multitable(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     dedup = scored.groupBy("q_id", "neighbor_id").agg(
         F.max("cosine").alias("cosine")
@@ -892,7 +938,7 @@ def topk_sq8(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -1337,7 +1383,7 @@ def topk_pq(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("cosine"),
     )
     rank_window = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -1436,7 +1482,7 @@ def topk_pq_rerank(
     ).select(
         "q_id",
         "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("pq_cosine"),
+        F.round(_cosine("q_vec", "c_vec"), 4).alias("pq_cosine"),
     )
     short_w = Window.partitionBy("q_id").orderBy(
         F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
@@ -1453,7 +1499,7 @@ def topk_pq_rerank(
         .select(
             "q_id",
             "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("t_vec")), 4).alias("cosine"),
+            F.round(_cosine("q_vec", "t_vec"), 4).alias("cosine"),
         )
     )
     rank_window = Window.partitionBy("q_id").orderBy(
@@ -1852,34 +1898,16 @@ KMEANS_ITERS = 2
 
 def _assign_to_centroids(emb: "DataFrame", cents: "DataFrame") -> "DataFrame":
     """(vec_id, embedding, cell_id): each vector's max-cosine centroid from
-    an explicit centroid table (cell_id, cent_vec), computed entirely
-    map-side (r18 audit — the ``_cell_ranked`` shape): the centroid table
-    collapses to a 1-row broadcast array and each vector reduces its own
-    bounded (cos, cell) list with ``sort_array(...)[0]`` — ZERO corpus
-    shuffle, where the previous broadcast-join + row_number window
-    planned an Exchange on vec_id in EVERY k-means iteration. Ties break
-    on lower cell_id after 4-decimal rounding, matching the SQL oracle
-    exactly (sort key (cc desc, -cell_id desc) == (cc desc, cell_id
-    asc))."""
+    an explicit centroid table (cell_id, cent_vec) — rank 1 of
+    :func:`_ranked_by_centroid`, computed map-side with no corpus shuffle.
+    Ties break on lower cell_id after 4-decimal rounding, matching the SQL
+    oracle exactly."""
     from pyspark.sql import functions as F
 
-    cents_row = cents.select(
-        F.struct(F.col("cell_id"), F.col("cent_vec")).alias("c")
-    ).agg(F.collect_list("c").alias("cents"))
-    best = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_cosine(F.col("embedding"), c["cent_vec"]), 4).alias(
-                    "cc"
-                ),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )[0]
-    return emb.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id", "embedding", (-best["neg_cell_id"]).alias("cell_id")
+    return (
+        _ranked_by_centroid(emb.select("vec_id", "embedding"), cents, "embedding")
+        .where(F.col("rn") == 1)
+        .select("vec_id", "embedding", "cell_id")
     )
 
 
@@ -1908,12 +1936,7 @@ def kmeans_centroids(
     emb = (_emb(spark, sf_dir) if emb is None else emb).select(
         "vec_id", "embedding"
     )
-    cents = emb.where(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
+    cents = _seed_centroids(emb)
     mu = None
     for _ in range(n_iter):
         assigned = _assign_to_centroids(emb, cents)

@@ -371,6 +371,29 @@ def test_knn_join_methods_plan_shapes(spark):
         # the pairing must be a key-based equi-join on cell_id/bucket
         assert ("hashjoin" in plan.lower()) or ("sortmergejoin" in plan.lower()), plan
 
+    # norms stay below the pairing join: the pair-scoring Project holds
+    # exactly one dot-product fold, not the three of an inline cosine
+    for kwargs in (
+        {},
+        {"method": "ivf", "centroids": cents, "probes": 2},
+        {"method": "rplsh"},
+    ):
+        projects = _projects_above_first_join(knn_join(a, b, 3, **kwargs))
+        assert projects, kwargs
+        assert projects[-1].count("zip_with(") == 1, (kwargs, projects[-1])
+
+
+def _projects_above_first_join(df) -> list:
+    """Project lists on the optimized logical plan's path from the root
+    down to its topmost Join (the last one sits directly over the pairing)."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    projects = []
+    while node.nodeName() != "Join":
+        if node.nodeName() == "Project":
+            projects.append(node.projectList().toString())
+        node = node.children().apply(0)
+    return projects
+
 
 def test_corpus_assembly_plan_shapes(spark):
     """Corpus-assembly scale contracts: the Gopher gate is a shuffle-free

@@ -168,29 +168,6 @@ def _brute_assign(rows, cents):
     return out
 
 
-def test_ranked_by_centroid_no_shuffle_and_matches_bruteforce(spark):
-    from pyspark.sql import functions as F
-
-    from polarify_spark.operators import knn
-
-    emb, cents = _toy_vectors(spark)
-    side = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    cc = cents
-    ranked = knn._ranked_by_centroid(side, cc)
-    plan = _plan(ranked)
-    # the r18 rewrite's point: ranking a bounded centroid list is
-    # map-side work — no hash-partitioned exchange, no window
-    assert "hashpartitioning" not in plan
-    assert "Window" not in plan
-    got = {r["id"]: r["cell_id"] for r in ranked.where(F.col("rn") == 1).collect()}
-    rows = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
-    cs = [(r["cell_id"], r["cent_vec"]) for r in cents.collect()]
-    assert got == _brute_assign(rows, cs)
-    # full ranking covers every centroid exactly once per row
-    n = ranked.groupBy("id").count().select(F.min("count"), F.max("count")).first()
-    assert n[0] == n[1] == len(cs)
-
-
 def test_assign_to_centroids_no_shuffle_and_matches_bruteforce(spark):
     from polarify_spark.operators import similarity
 
